@@ -109,6 +109,13 @@ _PY_TOKEN_RE = re.compile(
 )
 
 
+# Python `re` form of TOKEN_REGEX: [^\W_] is \p{L}\p{N} (Unicode letters and
+# digits), _PY_MARK the BMP part of \p{M}. Unlike _PY_TOKEN_RE it has no CJK
+# alternatives, so an ideograph run stays one token as the JVM path keeps it.
+_PY_JVM_RUN = rf"[^\W_](?:[^\W_]|[{_PY_MARK}])*"
+_PY_JVM_TOKEN_RE = re.compile(rf"{_PY_JVM_RUN}(?:['\u2019.]{_PY_JVM_RUN})*")
+
+
 def _java_lower(s: str) -> str:
     """Per-codepoint lowercase approximating java.lang.Character.toLowerCase.
 
@@ -241,6 +248,22 @@ def tokenize_preanalyzed_udf(vals: pd.Series) -> pd.Series:
     from .preanalyzed import preanalyzed_placeholder_tokens
 
     return vals.map(preanalyzed_placeholder_tokens)
+
+
+def jvm_analyze(text: str | None) -> list[tuple[int, str]]:
+    """Query-side twin of `token_array` (tokenizer='jvm', the default index
+    chain): [(pre-stop position, token)] from the same token regex over the
+    whole-string-lowercased text, with the stop/length filters the inverter
+    applies. CJK and Katakana runs stay whole, exactly as the index keeps
+    them; every regex match consumes a position, as in
+    `tokens_with_positions`."""
+    if not text:
+        return []
+    return [
+        (pos, tok)
+        for pos, tok in enumerate(m.group(0) for m in _PY_JVM_TOKEN_RE.finditer(text.lower()))
+        if tok not in ENGLISH_STOP_WORDS and len(tok) <= MAX_TOKEN_LENGTH
+    ]
 
 
 def folding_analyze(text: str | None) -> list[tuple[int, str]]:

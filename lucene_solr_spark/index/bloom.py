@@ -200,7 +200,11 @@ def build_bloom_sidecar(spark, paths, saturation: float = 0.10,
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    terms = spark.read.parquet(paths.terms).select("term")
+    with open(paths.stats) as f:
+        stats = json.load(f)
+    # the live dictionary: an NRT append or merge writes a new terms dir
+    terms_dir = os.path.join(paths.root, stats.get("terms_dir", "terms"))
+    terms = spark.read.parquet(terms_dir).select("term")
     n = expected_values if expected_values is not None else terms.count()
     size = get_set_size_for_quality(n, saturation)
     if size < 0:
@@ -219,8 +223,11 @@ def build_bloom_sidecar(spark, paths, saturation: float = 0.10,
     )
     out_dir = os.path.join(paths.root, "bloom")
     words.write.mode("overwrite").parquet(out_dir)
+    # max_doc names the index state the filter describes: an append grows
+    # it, and a searcher stops consulting a filter that lacks the new terms
     meta = {"version": 2, "bloom_size": size, "hash": "MurmurHash2",
-            "n_values": int(n), "saturation_target": saturation}
+            "n_values": int(n), "saturation_target": saturation,
+            "max_doc": int(stats["max_doc"])}
     with open(os.path.join(paths.root, "bloom_meta.json"), "w") as f:
         json.dump(meta, f)
     return out_dir
@@ -234,6 +241,10 @@ class BloomDict:
         self.spark = spark
         self.root = root
         self._set: FuzzySet | None = None
+        with open(os.path.join(root, "bloom_meta.json")) as f:
+            self.meta = json.load(f)
+        # the index max_doc the filter was built at (None: older sidecar)
+        self.max_doc: int | None = self.meta.get("max_doc")
 
     @staticmethod
     def exists(root: str) -> bool:
@@ -241,9 +252,7 @@ class BloomDict:
 
     def _load(self) -> FuzzySet:
         if self._set is None:
-            with open(os.path.join(self.root, "bloom_meta.json")) as f:
-                meta = json.load(f)
-            size = meta["bloom_size"]
+            size = self.meta["bloom_size"]
             rows = self.spark.read.parquet(
                 os.path.join(self.root, "bloom")).collect()
             words = np.zeros((size + 1 + 63) // 64, dtype=np.uint64)

@@ -56,15 +56,48 @@ def norm_cache(stats: BM25Stats) -> np.ndarray:
     return (K1 * ((one - B) + B * NORM_DOCLEN_TABLE / avgdl)).astype(np.float32)
 
 
+def term_weight(df: int, max_doc: int) -> np.float32:
+    """float32 weight = idf * (k1 + 1) of one term (BM25Similarity.java:185-198)."""
+    return np.float32(bm25_idf(int(df), max_doc) * (K1 + np.float32(1.0)))
+
+
+def phrase_weight(dfs, max_doc: int) -> np.float32:
+    """float32 phrase weight: the idf of every distinct phrase term summed in
+    double, rounded once, times (k1 + 1) (BM25Similarity.java:185-198)."""
+    idf_sum = np.float32(sum(float(bm25_idf(int(df), max_doc)) for df in dfs))
+    return np.float32(idf_sum * (K1 + np.float32(1.0)))
+
+
+def posting_scores(
+    w: np.float32, tfs: np.ndarray, norm_bytes: np.ndarray, cache: np.ndarray
+) -> np.ndarray:
+    """float32 score of every posting of one term (or phrase): w * tf /
+    (tf + cache[norm_byte]), each step rounded to float32
+    (BM25Similarity.java:228-237). `tfs` may be fractional (sloppy phrase
+    freqs)."""
+    tf32 = np.asarray(tfs, dtype=np.float32)
+    norms = cache[np.asarray(norm_bytes, dtype=np.int64) & 0xFF]
+    return (np.float32(w) * tf32 / (tf32 + norms)).astype(np.float32)
+
+
+def posting_bounds(
+    w: float, tfs: np.ndarray, norm_bytes: np.ndarray, cache: np.ndarray
+) -> np.ndarray:
+    """float64 twin of `posting_scores` for block-max upper bounds: the
+    score is increasing in tf and decreasing in cache[norm_byte], so the
+    bound of a block's (max tf, min-length norm byte) bounds every posting
+    in it."""
+    tf64 = np.asarray(tfs, dtype=np.float64)
+    return float(w) * tf64 / (tf64 + cache[np.asarray(norm_bytes, dtype=np.int64)])
+
+
 def bm25_score(
     tf: np.ndarray, df: int, norm_bytes: np.ndarray, stats: BM25Stats
 ) -> np.ndarray:
     """Per-doc float32 score of one term (BM25Similarity.java:228-237)."""
-    weight = (bm25_idf(df, stats.max_doc) * (K1 + np.float32(1.0))).astype(np.float32)
-    cache = norm_cache(stats)
-    tf32 = np.asarray(tf, dtype=np.float32)
-    norms = cache[np.asarray(norm_bytes, dtype=np.int64) & 0xFF]
-    return (weight * tf32 / (tf32 + norms)).astype(np.float32)
+    return posting_scores(
+        term_weight(df, stats.max_doc), tf, norm_bytes, norm_cache(stats)
+    )
 
 
 def brute_force_topk(

@@ -6,20 +6,33 @@ scorer trees from BooleanQuery.java:302-364) onto Spark plans:
 - term dictionary lookup  → driver-side filter of the `terms` table
   (BlockTree in-RAM FST analog: tiny broadcastable lookup per query)
 - TermScorer              → scan postings rows for the termIDs (parquet
-  row-group pruning on the sorted term column), numpy kernel per row: cumsum gaps →
-  docIDs, score = weight * tf / (tf + cache[norm_byte])   — float32, same
-  factorization as BM25Similarity.java:228-237
-- BooleanQuery SHOULD sum → groupBy(doc).sum(score) (DisjunctionSumScorer)
-- MUST conjunction        → HAVING count(matched must terms) == n
-  (ConjunctionScorer's leap-frog, expressed as hash agg)
-- MUST_NOT                → LEFT ANTI JOIN (ReqExclScorer)
-- minimumNumberShouldMatch→ HAVING matched >= m (MinShouldMatchSumScorer)
+  row-group pruning on the sorted term column), numpy kernel per row:
+  `_doc_ids` decodes the gaps, `bm25.posting_scores` gives weight * tf /
+  (tf + cache[norm_byte]) — float32, same factorization as
+  BM25Similarity.java:228-237
+- BooleanQuery            → one clause compiler: `boolean_search`, `search`
+  and parsed queries all become parser `Clause`s run by `_clauses_scored`
+  - SHOULD sum            → float64 sum per doc, cast once to float32
+                            (DisjunctionSumScorer)
+  - MUST conjunction      → matched MUST clauses == number of MUST clauses
+                            (ConjunctionScorer's leap-frog, as a count)
+  - MUST_NOT              → exclusion of the negative clauses' docs
+                            (ReqExclScorer)
+  - minimumNumberShouldMatch → matched SHOULD clauses >= m
+                            (MinShouldMatchSumScorer)
 - PhraseQuery             → per-doc position-set intersection of
   (pos_i - i) (ExactPhraseScorer.java:29-82), freq feeds the same BM25 tf
-  formula with summed idf (BM25Similarity.java:185-198)
+  formula with the idf of the distinct phrase terms summed
+  (BM25Similarity.java:185-198)
 - top-k                   → orderBy(score desc, docID asc).limit(k) =
   TopScoreDocCollector + HitQueue tie-break (HitQueue.java:76-81), executed
-  as Spark's distributed TakeOrderedAndProject
+  as Spark's distributed TakeOrderedAndProject, after liveDocs and fq
+
+Placement is decided once per query from dictionary stats
+(`Searcher._single_slice`): when the query's Σdf postings and Σttf
+positions fit SINGLE_SLICE_POSTINGS / SINGLE_SLICE_POSITIONS, one kernel
+over one coalesced scan scores, combines and excludes (`_one_slice`);
+otherwise the per-clause scans are combined by a distributed groupBy.
 """
 
 from __future__ import annotations
@@ -27,20 +40,34 @@ from __future__ import annotations
 import json
 import math
 import os
-from typing import Iterator
+import re
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..analysis.analyzer import standard_tokenize
+from ..analysis.analyzer import jvm_analyze, standard_tokenize
 from ..index.build import IndexPaths
-from .bm25 import B, BM25Stats, K1, bm25_idf, norm_cache
+from .bm25 import (
+    B, BM25Stats, K1, bm25_idf, norm_cache, phrase_weight, posting_bounds,
+    posting_scores, term_weight,
+)
+from .parser import MUST, MUST_NOT, SHOULD, Clause, parse
 
 # "single-slice path not applicable" sentinel (None already means "matches
 # nothing" in the clause-execution contract)
 _SLICE_NA = object()
+
+# One-slice budgets, checked against the dictionary before any Spark job:
+# a query whose postings (Σdf) and phrase positions (Σttf) both fit runs as
+# one kernel over one coalesced scan (tens of MB of posting arrays at most);
+# anything larger takes the distributed plan, so this is a fixed-cost cut
+# for selective queries, not a scale cap. A budget of 0 sends every query
+# that reads a posting to the distributed plan.
+SINGLE_SLICE_POSTINGS = 1_000_000
+SINGLE_SLICE_POSITIONS = 250_000
 
 
 def _ranges(reps: np.ndarray) -> np.ndarray:
@@ -49,6 +76,57 @@ def _ranges(reps: np.ndarray) -> np.ndarray:
     out = np.arange(total, dtype=np.int64)
     starts = np.repeat(np.cumsum(reps) - reps, reps)
     return out - starts
+
+
+def _wildcard_regex(pattern: str) -> str:
+    """Anchored regex of a wildcard pattern: `*` any run, `?` one char
+    (WildcardQuery.java:116)."""
+    return "^" + "".join(
+        ".*" if c == "*" else "." if c == "?" else re.escape(c) for c in pattern
+    ) + "$"
+
+
+def _doc_ids(row) -> np.ndarray:
+    """docIDs of one packed posting row: first_doc + running sum of gaps."""
+    return row.first_doc + np.cumsum(np.asarray(row.doc_gaps, dtype=np.int64))
+
+
+def _positions(row, tfs: np.ndarray) -> list[np.ndarray]:
+    """Per-doc position lists of one packed posting row (pos_flat cut by tf)."""
+    return np.split(np.asarray(row.pos_flat, dtype=np.int64), np.cumsum(tfs)[:-1])
+
+
+def _term_slots(slots: list[list[str]]) -> dict[str, list[int]]:
+    """term → the phrase slots it may fill."""
+    out: dict[str, list[int]] = {}
+    for i, slot in enumerate(slots):
+        for t in slot:
+            out.setdefault(t, []).append(i)
+    return out
+
+
+def _phrase_slots(entries, term_slots: dict, n_slots: int) -> list | None:
+    """Offset-adjusted positions (pos - slot) of one doc per phrase slot,
+    from its (term, positions) entries; alternatives of one slot union.
+    None when some slot has no alternative in the doc."""
+    slot_arrs: list[np.ndarray | None] = [None] * n_slots
+    for term, p in entries:
+        for si in term_slots.get(term, ()):
+            adj = p - si
+            prev = slot_arrs[si]
+            slot_arrs[si] = adj if prev is None else np.union1d(prev, adj)
+    return None if any(a is None for a in slot_arrs) else slot_arrs
+
+
+class _Phrase(NamedTuple):
+    """One (multi-)phrase clause of the one-slice kernel: a list of slots,
+    each a list of term alternatives."""
+
+    slots: list
+    weight: np.float32 = np.float32(1.0)
+    slop: int = 0
+    boost: float = 1.0
+    must: bool = False
 
 
 class Searcher:
@@ -64,13 +142,6 @@ class Searcher:
         self._cache_terms = cache_terms
         # fat posting rows → small columnar reader batches
         spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-        # optional bloom sidecar over the term dictionary (index/bloom.py)
-        from ..index.bloom import BloomDict
-
-        self._bloom = (
-            BloomDict(spark, self.paths.root)
-            if BloomDict.exists(self.paths.root) else None
-        )
         self.reopen()
 
     def reopen(self) -> "Searcher":
@@ -131,6 +202,18 @@ class Searcher:
         # zero-action single-term top-k (absent on pre-imp_docs indexes)
         self._impact_docs_on = self._impacts_on and "imp_docs" in self.terms.columns
         self._impact_cache = {}
+        # optional bloom sidecar over the term dictionary (index/bloom.py),
+        # re-read on every reopen and used only while it describes this
+        # index: terms appended after it was built would be answered NO
+        from ..index.bloom import BloomDict
+
+        bloom = (
+            BloomDict(self.spark, self.paths.root)
+            if BloomDict.exists(self.paths.root) else None
+        )
+        self._bloom = (
+            bloom if bloom is not None and bloom.max_doc == meta["max_doc"] else None
+        )
         self._deletes = None
         deletes_dir = os.path.join(self.paths.root, "deletes")
         if os.path.exists(deletes_dir):
@@ -299,48 +382,60 @@ class Searcher:
             from ..analysis.analyzer import icu_analyze
 
             return [t for _, t in icu_analyze(query_text)]
+        if self.meta.get("tokenizer", "jvm") == "jvm":
+            return [t for _, t in jvm_analyze(query_text)]
         return [t for _, t in standard_tokenize(query_text)]
 
     # --- scoring scan -----------------------------------------------------
-    def _scored(self, tinfo: pd.DataFrame) -> DataFrame:
-        """(doc_id, term, score float) for every posting of the query
-        terms. One scan, numpy kernels, no joins (norms are in the rows)."""
-        if tinfo.empty:
-            return self.spark.createDataFrame([], "doc_id long, term string, score float")
-        weights = {
-            str(t): np.float32(bm25_idf(int(df_), self.stats.max_doc) * (K1 + np.float32(1.0)))
-            for t, df_ in zip(tinfo["term"], tinfo["df"])
-        }
-        cache = norm_cache(self.stats)
-        qterms = sorted(weights)
+    def _posting_scores(self, scorers: dict, with_term: bool = False) -> DataFrame:
+        """(doc_id[, term], score float) for every posting of the scorers'
+        terms: one term-pruned scan, one Arrow kernel, no joins (norms are in
+        the rows). `scorers[term](tfs, norm_bytes)` gives the float32 posting
+        scores — BM25 and every other similarity share this scan."""
+        schema = "doc_id long, score float"
+        if with_term:
+            schema = "doc_id long, term string, score float"
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
                 out_doc, out_term, out_score = [], [], []
                 for row in pdf.itertuples(index=False):
-                    gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                    docs = row.first_doc + np.cumsum(gaps)
-                    tfs = np.asarray(row.tfs, dtype=np.float32)
-                    nbs = np.asarray(row.norm_bytes, dtype=np.int64)
-                    w = np.float32(weights[row.term])
-                    scores = (w * tfs / (tfs + cache[nbs])).astype(np.float32)
+                    docs = _doc_ids(row)
                     out_doc.append(docs)
-                    out_term.extend([row.term] * len(docs))
-                    out_score.append(scores)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_doc),
-                        "term": out_term,
-                        "score": np.concatenate(out_score),
-                    }
-                )
+                    if with_term:
+                        out_term.extend([row.term] * len(docs))
+                    out_score.append(
+                        scorers[row.term](
+                            np.asarray(row.tfs, dtype=np.int64),
+                            np.asarray(row.norm_bytes, dtype=np.int64),
+                        )
+                    )
+                if out_doc:
+                    out = {"doc_id": np.concatenate(out_doc)}
+                    if with_term:
+                        out["term"] = out_term
+                    out["score"] = np.concatenate(out_score)
+                    yield pd.DataFrame(out)
 
-        rows = self.postings.where(F.col("term").isin(qterms)).select(
+        rows = self.postings.where(F.col("term").isin(sorted(scorers))).select(
             "term", "first_doc", "doc_gaps", "tfs", "norm_bytes"
         )
-        return rows.mapInPandas(kernel, schema="doc_id long, term string, score float")
+        return rows.mapInPandas(kernel, schema=schema)
+
+    def _scored(self, tinfo: pd.DataFrame) -> DataFrame:
+        """(doc_id, term, score float) BM25 score of every posting of the
+        query terms."""
+        if tinfo.empty:
+            return self.spark.createDataFrame([], "doc_id long, term string, score float")
+        cache = norm_cache(self.stats)
+        scorers = {
+            str(t): (
+                lambda tfs, nbs, w=term_weight(df_, self.stats.max_doc):
+                posting_scores(w, tfs, nbs, cache)
+            )
+            for t, df_ in zip(tinfo["term"], tinfo["df"])
+        }
+        return self._posting_scores(scorers, with_term=True)
 
     # --- block-max WAND (lossless pruned top-k) ---------------------------
     @staticmethod
@@ -399,17 +494,12 @@ class Searcher:
             return None
         if df_ > n_kept and k > n_kept:
             return None
-        w = np.float32(
-            bm25_idf(df_, self.stats.max_doc) * (K1 + np.float32(1.0))
-        )
+        w = term_weight(df_, self.stats.max_doc)
         cache32 = norm_cache(self.stats)
-        tf32 = imp_tfs.astype(np.float32)
-        scores = (w * tf32 / (tf32 + cache32[imp_nbs])).astype(np.float32)
+        scores = posting_scores(w, imp_tfs, imp_nbs, cache32)
         order = np.lexsort((imp_docs, -scores.astype(np.float64)))[:k]
         if df_ > n_kept:
-            r64 = imp_tfs.astype(np.float64) / (
-                imp_tfs + cache32.astype(np.float64)[imp_nbs]
-            )
+            r64 = posting_bounds(1.0, imp_tfs, imp_nbs, cache32)
             bound = np.float32(float(w) * float(r64.min()))
             for _ in range(6):
                 bound = np.nextafter(bound, np.float32("inf"))
@@ -487,9 +577,9 @@ class Searcher:
                     starts = np.empty_like(last)
                     starts[0] = row.first_doc
                     starts[1:] = last[:-1] + 1
-                    bmtf = np.asarray(row.block_max_tf, dtype=np.float64)
-                    bmnb = np.asarray(row.block_max_nb, dtype=np.int64)
-                    ub = float(w32[row.term]) * bmtf / (bmtf + cache[bmnb])
+                    ub = posting_bounds(
+                        w32[row.term], row.block_max_tf, row.block_max_nb, cache
+                    )
                     lo = (starts - chunk_start) // bucket
                     hi = (last - chunk_start) // bucket
                     arr = per_term.setdefault(
@@ -515,16 +605,15 @@ class Searcher:
                     live = None  # nothing prunable: skip the mask cost
             acc = np.zeros(chunk_span, dtype=np.float64)
             for row in pdf.itertuples(index=False):
-                gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                off = np.cumsum(gaps) + (row.first_doc - chunk_start)
-                tfs = np.asarray(row.tfs, dtype=np.float32)
+                off = _doc_ids(row) - chunk_start
+                tfs = np.asarray(row.tfs, dtype=np.int64)
                 nbs = np.asarray(row.norm_bytes, dtype=np.int64)
                 if live is not None:
                     m = live[off // bucket]
                     if not m.any():
                         continue
                     off, tfs, nbs = off[m], tfs[m], nbs[m]
-                s = (w32[row.term] * tfs / (tfs + cache[nbs])).astype(np.float32)
+                s = posting_scores(w32[row.term], tfs, nbs, cache)
                 np.add.at(acc, off, s.astype(np.float64))
             nz = np.flatnonzero(acc)
             if len(nz) == 0:
@@ -650,9 +739,7 @@ class Searcher:
                     pruning_stats["auto_head_tail"] = True
 
         weights = {
-            str(t): float(
-                np.float32(bm25_idf(int(df_), self.stats.max_doc) * (K1 + np.float32(1.0)))
-            )
+            str(t): float(term_weight(df_, self.stats.max_doc))
             for t, df_ in zip(tinfo["term"], tinfo["df"])
         }
         cache = norm_cache(self.stats)
@@ -682,10 +769,7 @@ class Searcher:
                 # exact float32 replay of the scoring kernel on the sketched
                 # (tf, norm_byte) pairs — k distinct real docs, so the k-th
                 # best of these scores is ≤ the global k-th best: a valid θ
-                tf32 = imp_tfs.astype(np.float32)
-                s = (np.float32(weights[t]) * tf32 / (tf32 + cache[imp_nbs])).astype(
-                    np.float32
-                )
+                s = posting_scores(weights[t], imp_tfs, imp_nbs, cache)
                 if len(s) >= k:
                     theta = max(theta, float(np.sort(s)[::-1][k - 1]))
                 if imp_docs is None:
@@ -958,9 +1042,9 @@ class Searcher:
                         starts = np.empty_like(last)
                         starts[0] = row.first_doc
                         starts[1:] = last[:-1] + 1  # blocks are doc-sorted
-                        bmtf = np.asarray(row.block_max_tf, dtype=np.float64)
-                        bmnb = np.asarray(row.block_max_nb, dtype=np.int64)
-                        ub = float(w32[row.term]) * bmtf / (bmtf + cache[bmnb])
+                        ub = posting_bounds(
+                            w32[row.term], row.block_max_tf, row.block_max_nb, cache
+                        )
                         b_lo = starts // bucket_span
                         b_hi = last // bucket_span
                         # expand each block to the buckets it spans
@@ -1014,9 +1098,8 @@ class Searcher:
             for pdf in batches:
                 out_doc, out_score = [], []
                 for row in pdf.itertuples(index=False):
-                    gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                    docs = row.first_doc + np.cumsum(gaps)
-                    tfs = np.asarray(row.tfs, dtype=np.float32)
+                    docs = _doc_ids(row)
+                    tfs = np.asarray(row.tfs, dtype=np.int64)
                     nbs = np.asarray(row.norm_bytes, dtype=np.int64)
                     if lb is not None:
                         if len(lb) == 0:
@@ -1027,9 +1110,8 @@ class Searcher:
                         if not mask.any():
                             continue
                         docs, tfs, nbs = docs[mask], tfs[mask], nbs[mask]
-                    w = w32[row.term]
                     out_doc.append(docs)
-                    out_score.append((w * tfs / (tfs + cache[nbs])).astype(np.float32))
+                    out_score.append(posting_scores(w32[row.term], tfs, nbs, cache))
                 if out_doc:
                     yield pd.DataFrame(
                         {"doc_id": np.concatenate(out_doc), "score": np.concatenate(out_score)}
@@ -1131,7 +1213,7 @@ class Searcher:
                 .toPandas()
             )
             for r in rows.itertuples(index=False):
-                docs = r.first_doc + np.cumsum(np.asarray(r.doc_gaps, dtype=np.int64))
+                docs = _doc_ids(r)
                 pos = np.searchsorted(docs, doc_id)
                 if pos < len(docs) and docs[pos] == doc_id:
                     hits[r.term] = (int(r.tfs[pos]), int(r.norm_bytes[pos]) & 0xFF)
@@ -1147,9 +1229,7 @@ class Searcher:
                 continue
             tf, nb = hits[r.term]
             idf = bm25_idf(int(r.df), n)
-            w = np.float32(idf * (K1 + np.float32(1.0)))
-            tf32 = np.float32(tf)
-            value = np.float32(np.float32(w * tf32) / (tf32 + cache[nb]))
+            value = posting_scores(term_weight(r.df, n), [tf], [nb], cache)[0]
             dl = float(decode_norm_doclen(np.array([nb]))[0])
             tf_norm = float(value / idf) if idf else 0.0
             details.append(
@@ -1195,6 +1275,9 @@ class Searcher:
         k: int = 10,
         filter_docs: DataFrame | None = None,
     ) -> DataFrame:
+        """BooleanQuery of TermQuery clauses, compiled to parser `Clause`s and
+        run by `_clauses_scored` like a parsed query. Repeated terms collapse
+        to one clause, and a term in both `must` and `should` is MUST only."""
         must, should, must_not = must or [], should or [], must_not or []
         if (
             len(should) == 1
@@ -1207,43 +1290,17 @@ class Searcher:
             fast = self._impact_topk_single(should[0], k)
             if fast is not None:
                 return fast
-        tinfo = self.lookup_terms(must + should)
-        found = set(tinfo["term"])
-        if any(t not in found for t in must) or tinfo.empty:
-            return self.spark.createDataFrame([], "doc_id long, score float")
-
-        must_terms = sorted({r.term for r in tinfo.itertuples() if r.term in set(must)})
-        if filter_docs is None:
-            fast = self._single_slice_boolean(
-                tinfo, must_terms, must_not, min_should_match, k
-            )
-            if fast is not None:
-                return fast
-        per_term = self._scored(tinfo)
-        agg = per_term.groupBy("doc_id").agg(
-            F.sum("score").cast("float").alias("score"),
-            F.count(F.when(F.col("term").isin(must_terms), 1)).alias("n_must"),
-            F.count(F.lit(1)).alias("n_matched"),
-        )
-        cond = F.col("n_must") == len(must_terms)
-        if min_should_match > 0:
-            cond = cond & (F.col("n_matched") - F.col("n_must") >= min_should_match)
-        matched = agg.where(cond)
-
-        if must_not:
-            neg_info = self.lookup_terms(must_not)
-            if not neg_info.empty:
-                # excluded docs need no scores — decode doc_ids only
-                # (ReqExclScorer iterates the excluded side without scoring).
-                # distinct() (a full extra exchange+agg) only pays when >1
-                # excluded term can duplicate doc_ids; one term's postings
-                # are unique by construction and anti-join tolerates dups.
-                neg_docs = self._posting_docs(neg_info)
-                if len(neg_info) > 1:
-                    neg_docs = neg_docs.distinct()
-                matched = matched.join(neg_docs, "doc_id", "left_anti")
-        matched = self._apply_filter(matched, filter_docs)
-        return self._topk(self._drop_deleted(matched), k)
+        must = list(dict.fromkeys(must))
+        clauses = [Clause(MUST, "term", [t]) for t in must]
+        clauses += [
+            Clause(SHOULD, "term", [t]) for t in dict.fromkeys(should) if t not in must
+        ]
+        clauses += [Clause(MUST_NOT, "term", [t]) for t in dict.fromkeys(must_not)]
+        scored = self._clauses_scored(clauses, min_should_match=min_should_match)
+        if scored is None:
+            return self._empty()
+        scored = self._apply_filter(scored, filter_docs)
+        return self._topk(self._drop_deleted(scored), k)
 
     def max_score_search(
         self,
@@ -1427,118 +1484,6 @@ class Searcher:
         matched = self._apply_filter(matched, filter_docs)
         return self._topk(self._drop_deleted(matched), k)
 
-    def _single_slice_boolean(
-        self,
-        tinfo: pd.DataFrame,
-        must_terms: list[str],
-        must_not: list[str],
-        min_should_match: int,
-        k: int,
-    ) -> DataFrame | None:
-        """Collapsed single-slice execution of a boolean query whose TOTAL
-        matched postings fit one executor slice (Σdf across all clauses ≤
-        LSS_SINGLE_SLICE_POSTINGS, default 1M ≈ tens of MB of posting
-        arrays). The term-pruned scan is coalesced to ONE partition and a
-        single Arrow kernel does score + per-doc combine + must/msm/
-        must_not logic + top-k in-process — the plan is scan →
-        TakeOrderedAndProject: one job, one stage, NO exchange.
-
-        This is the SolrCore-local search regime: a Lucene searcher scores
-        a whole (small) segment in one thread with no cross-process merge
-        (IndexSearcher.java:581-619 single-slice path; Lucene only fans out
-        when multiple leaves warrant it). Queries whose matched postings
-        exceed the slice budget — the regime that actually occurs at 100 TB
-        head terms — fall through to the distributed scan+aggregate plan,
-        so this is a fixed-cost cut for the long tail of selective queries,
-        not a scale cap. Scores are identical: the kernel sums per-term
-        float32 scores in float64 and casts once, exactly like the
-        distributed `sum(score)::float` aggregate; tombstones present or an
-        fq filter disable the path (those compose distributed)."""
-        limit = int(os.environ.get("LSS_SINGLE_SLICE_POSTINGS", str(1_000_000)))
-        if limit <= 0 or self._deletes is not None:
-            return None
-        neg_info = self.lookup_terms(must_not) if must_not else None
-        neg_terms = set() if neg_info is None else set(neg_info["term"])
-        total_df = int(tinfo["df"].sum())
-        if neg_info is not None and not neg_info.empty:
-            total_df += int(neg_info["df"].sum())
-        if total_df > limit:
-            return None
-
-        weights = {
-            str(t): np.float32(
-                bm25_idf(int(df_), self.stats.max_doc) * (K1 + np.float32(1.0))
-            )
-            for t, df_ in zip(tinfo["term"], tinfo["df"])
-        }
-        cache = norm_cache(self.stats)
-        must_set = set(must_terms)
-        qterms = sorted(set(weights) | neg_terms)
-        n_must_req = len(must_terms)
-        msm = int(min_should_match)
-        kk = int(k)
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            docs_l: list[np.ndarray] = []
-            score_l: list[np.ndarray] = []
-            must_l: list[np.ndarray] = []
-            neg_l: list[np.ndarray] = []
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                    docs = row.first_doc + np.cumsum(gaps)
-                    if row.term in neg_terms:
-                        neg_l.append(docs)
-                    if row.term in weights:
-                        tfs = np.asarray(row.tfs, dtype=np.float32)
-                        nbs = np.asarray(row.norm_bytes, dtype=np.int64)
-                        w = np.float32(weights[row.term])
-                        docs_l.append(docs)
-                        score_l.append(
-                            (w * tfs / (tfs + cache[nbs])).astype(np.float32)
-                        )
-                        must_l.append(
-                            np.full(
-                                len(docs),
-                                1 if row.term in must_set else 0,
-                                dtype=np.int64,
-                            )
-                        )
-            if not docs_l:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.array([], dtype=np.int64),
-                        "score": np.array([], dtype=np.float32),
-                    }
-                )
-                return
-            alldocs = np.concatenate(docs_l)
-            u, inv = np.unique(alldocs, return_inverse=True)
-            # float64 accumulation then ONE float32 cast == the distributed
-            # sum(score)::float (Spark sums FloatType in double)
-            ssum = np.zeros(len(u), dtype=np.float64)
-            np.add.at(ssum, inv, np.concatenate(score_l).astype(np.float64))
-            nmust = np.zeros(len(u), dtype=np.int64)
-            np.add.at(nmust, inv, np.concatenate(must_l))
-            nmatched = np.bincount(inv, minlength=len(u))
-            mask = nmust == n_must_req
-            if msm > 0:
-                mask &= (nmatched - nmust) >= msm
-            if neg_l:
-                mask &= ~np.isin(u, np.concatenate(neg_l))
-            uu = u[mask]
-            s32 = ssum[mask].astype(np.float32)
-            order = np.lexsort((uu, -s32.astype(np.float64)))[:kk]
-            yield pd.DataFrame({"doc_id": uu[order], "score": s32[order]})
-
-        rows = (
-            self.postings.where(F.col("term").isin(qterms))
-            .select("term", "first_doc", "doc_gaps", "tfs", "norm_bytes")
-            .coalesce(1)
-            .mapInPandas(kernel, schema="doc_id long, score float")
-        )
-        return self._topk(rows, k)
-
     def search_classic(
         self, query: str | list[str], k: int = 10
     ) -> DataFrame:
@@ -1567,7 +1512,7 @@ class Searcher:
             str(t): (lambda tf, nb, v=values[str(t)]: classic_scores(tf, nb, v))
             for t in tinfo["term"]
         }
-        return self._search_tfidf(tinfo, scorers, len(uniq), k)
+        return self._search_tfidf(scorers, len(uniq), k)
 
     def search_sweetspot(
         self,
@@ -1606,43 +1551,13 @@ class Searcher:
             )
             for t in tinfo["term"]
         }
-        return self._search_tfidf(tinfo, scorers, len(uniq), k)
+        return self._search_tfidf(scorers, len(uniq), k)
 
-    def _search_tfidf(self, tinfo, scorers, max_overlap: int, k: int) -> DataFrame:
+    def _search_tfidf(self, scorers, max_overlap: int, k: int) -> DataFrame:
         """Shared TFIDFSimilarity-family execution (classic + SweetSpot):
         per-posting float32 scores → float32(double sum) × float32 coord
         (DisjunctionSumScorer.java:96-98) → top-k."""
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_doc, out_score = [], []
-                for row in pdf.itertuples(index=False):
-                    gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                    docs = row.first_doc + np.cumsum(gaps)
-                    out_doc.append(docs)
-                    out_score.append(
-                        scorers[row.term](
-                            np.asarray(row.tfs, dtype=np.int64),
-                            np.asarray(row.norm_bytes, dtype=np.int64),
-                        )
-                    )
-                if out_doc:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(out_doc),
-                            "score": np.concatenate(out_score),
-                        }
-                    )
-
-        rows = self.postings.where(
-            F.col("term").isin(sorted(set(tinfo["term"])))
-        ).select("term", "first_doc", "doc_gaps", "tfs", "norm_bytes")
-        per_term = rows.mapInPandas(kernel, schema="doc_id long, score float")
-        # float32(double sum) then × float32 coord — the
-        # DisjunctionSumScorer/BooleanScorer2 combine, all JVM-side
-        agg = per_term.groupBy("doc_id").agg(
+        agg = self._posting_scores(scorers).groupBy("doc_id").agg(
             F.sum("score").cast("float").alias("s32"),
             F.count(F.lit(1)).alias("n_matched"),
         )
@@ -1775,242 +1690,171 @@ class Searcher:
             str(t): make_scorer(str(t), int(df), int(ttf))
             for t, df, ttf in zip(tinfo["term"], tinfo["df"], tinfo["ttf"])
         }
+        # unit coord: the TF-IDF combine without its coord step
+        return self._search_tfidf(scorers, 1, k)
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_doc, out_score = [], []
-                for row in pdf.itertuples(index=False):
-                    gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                    out_doc.append(row.first_doc + np.cumsum(gaps))
-                    out_score.append(
-                        scorers[row.term](
-                            np.asarray(row.tfs, dtype=np.int64),
-                            np.asarray(row.norm_bytes, dtype=np.int64),
-                        )
-                    )
-                if out_doc:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(out_doc),
-                            "score": np.concatenate(out_score),
-                        }
-                    )
+    # --- placement and the one-slice kernel --------------------------------
+    def _single_slice(self, postings: int, positions: int = 0) -> bool:
+        """Placement, decided once per query from dictionary stats: True when
+        the Σdf postings and Σttf positions the query reads both fit one
+        executor slice (SINGLE_SLICE_POSTINGS / SINGLE_SLICE_POSITIONS).
 
-        rows = self.postings.where(
-            F.col("term").isin(sorted(scorers))
-        ).select("term", "first_doc", "doc_gaps", "tfs", "norm_bytes")
-        per_term = rows.mapInPandas(kernel, schema="doc_id long, score float")
-        scored = per_term.groupBy("doc_id").agg(
-            F.sum("score").cast("float").alias("score")
-        )
-        return self._topk(self._drop_deleted(scored), k)
+        This is the SolrCore-local search regime: a Lucene searcher scores a
+        whole (small) segment in one thread with no cross-process merge
+        (IndexSearcher.java:581-619 single-slice path; Lucene only fans out
+        when multiple leaves warrant it)."""
+        return postings <= SINGLE_SLICE_POSTINGS and positions <= SINGLE_SLICE_POSITIONS
 
-    def _single_slice_clauses(self, clauses):
-        """Collapsed single-slice execution of a PARSED mixed boolean query
-        (term + phrase clauses, one field): when Σdf of every term clause
-        fits LSS_SINGLE_SLICE_POSTINGS and Σttf of every phrase term fits
-        LSS_SINGLE_SLICE_POSITIONS, ONE coalesced kernel over ONE
-        term-pruned postings scan evaluates BM25×boost term scores, phrase
-        alignment scores, MUST counting, and MUST_NOT exclusion — the plan
-        is scan → kernel, no unions, no groupBy exchange, no anti-join.
-        Returns the sentinel `_SLICE_NA` when not applicable (caller runs
-        the distributed `_clauses_scored` plan: groups, multi-term rewrites,
-        multi-field clauses, duplicate-term clause sets, or budgets
-        exceeded); returns None when nothing can match (same contract as
-        `_clauses_scored`). Per-clause float32 rounding mirrors the
-        distributed plan step for step."""
-        from .parser import MUST, MUST_NOT, SHOULD  # noqa: F401
-
-        limit_post = int(os.environ.get("LSS_SINGLE_SLICE_POSTINGS", str(1_000_000)))
-        limit_pos = int(os.environ.get("LSS_SINGLE_SLICE_POSITIONS", str(250_000)))
-        if limit_post <= 0 or limit_pos <= 0:
+    def _single_slice_clauses(self, scoring, negative, min_should_match: int = 0):
+        """One-slice execution of one boolean level of term and phrase
+        clauses on this searcher's field. Returns the sentinel `_SLICE_NA`
+        when not applicable (groups, multi-term rewrites, duplicate-term
+        clause sets, an index without positions, or a query over the
+        `_single_slice` budget) and None when nothing can match — the
+        `_clauses_scored` contract, whose missing-term semantics it mirrors."""
+        if any(c.kind not in ("term", "phrase") for c in scoring + negative):
             return _SLICE_NA
-        if any(c.kind not in ("term", "phrase") for c in clauses):
-            return _SLICE_NA
-        scoring = [c for c in clauses if c.occur in (MUST, SHOULD)]
-        negative = [c for c in clauses if c.occur == MUST_NOT]
-        if not scoring:
-            return None
         term_clauses = [c for c in scoring if c.kind == "term"]
         tterms = [c.terms[0] for c in term_clauses]
         if len(set(tterms)) != len(tterms):
             return _SLICE_NA  # duplicate-term clause sets keep the join path
         phrase_clauses = [c for c in scoring if c.kind == "phrase"]
-        neg_terms = sorted({c.terms[0] for c in negative if c.kind == "term"})
-        neg_phrases = [c for c in negative if c.kind == "phrase"]
-        need_pos = bool(phrase_clauses or neg_phrases)
-        if need_pos and "pos_flat" not in self.postings.columns:
+        neg_phrase_clauses = [c for c in negative if c.kind == "phrase"]
+        if (
+            phrase_clauses or neg_phrase_clauses
+        ) and "pos_flat" not in self.postings.columns:
             return _SLICE_NA
-
-        all_phrase_terms = sorted(
-            {t for c in phrase_clauses + neg_phrases for t in c.terms}
-        )
-        tinfo = self.lookup_terms(
-            sorted(set(tterms)) + neg_terms + all_phrase_terms
-        )
-        found = set(tinfo["term"])
+        neg_terms = {c.terms[0] for c in negative if c.kind == "term"}
+        phrase_terms = {t for c in phrase_clauses + neg_phrase_clauses for t in c.terms}
+        tinfo = self.lookup_terms(sorted(set(tterms) | neg_terms | phrase_terms))
         dfmap = {str(t): int(d) for t, d in zip(tinfo["term"], tinfo["df"])}
         ttfmap = {str(t): int(x) for t, x in zip(tinfo["term"], tinfo["ttf"])}
+        n = self.stats.max_doc
 
-        # missing-term MUST semantics, mirroring _clauses_scored
-        for c in term_clauses:
-            if c.occur == MUST and c.terms[0] not in found:
-                return None
-        phrase_specs = []
-        total_must = 0
+        if any(c.occur == MUST and c.terms[0] not in dfmap for c in term_clauses):
+            return None
+        phrases = []
         for c in phrase_clauses:
-            if any(t not in found for t in c.terms):
+            if any(t not in dfmap for t in c.terms):
                 if c.occur == MUST:
                     return None
                 continue  # SHOULD phrase with a missing term matches nothing
-            idf_sum = np.float32(
-                sum(float(bm25_idf(dfmap[t], self.stats.max_doc)) for t in c.terms)
+            weight = phrase_weight([dfmap[t] for t in sorted(set(c.terms))], n)
+            phrases.append(
+                _Phrase([[t] for t in c.terms], weight, boost=c.boost, must=c.occur == MUST)
             )
-            phrase_specs.append(
-                {
-                    "terms": list(c.terms),
-                    "weight": np.float32(idf_sum * (K1 + np.float32(1.0))),
-                    "boost": float(np.float32(c.boost)),
-                    "nm": 1 if c.occur == MUST else 0,
-                }
-            )
-            total_must += 1 if c.occur == MUST else 0
-        neg_phrase_specs = [
-            {"terms": list(c.terms), "weight": np.float32(1.0), "boost": 1.0, "nm": 0}
-            for c in neg_phrases
-            if all(t in found for t in c.terms)
-        ]
-        term_entries = [
-            (c.terms[0], float(np.float32(c.boost)), c.occur == MUST)
+        terms = [
+            (c.terms[0], term_weight(dfmap[c.terms[0]], n), c.boost, c.occur == MUST)
             for c in term_clauses
-            if c.terms[0] in found
+            if c.terms[0] in dfmap
         ]
-        total_must += sum(1 for _, _, m in term_entries if m)
-        if not term_entries and not phrase_specs:
+        if not terms and not phrases:
             return None
-
-        score_terms = sorted({t for t, _, _ in term_entries})
-        pos_terms = sorted(
-            {t for s in phrase_specs + neg_phrase_specs for t in s["terms"]}
-        )
-        budget_post = sum(dfmap.get(t, 0) for t in score_terms) + sum(
-            dfmap.get(t, 0) for t in neg_terms
-        )
-        budget_pos = sum(ttfmap.get(t, 0) for t in pos_terms)
-        if budget_post > limit_post or budget_pos > limit_pos:
+        neg_phrases = [
+            _Phrase([[t] for t in c.terms])
+            for c in neg_phrase_clauses
+            if all(t in dfmap for t in c.terms)
+        ]
+        neg_terms = sorted(neg_terms & dfmap.keys())
+        pos_terms = {t for p in phrases + neg_phrases for slot in p.slots for t in slot}
+        read = {t for t, _, _, _ in terms} | pos_terms | set(neg_terms)
+        if not self._single_slice(
+            sum(dfmap[t] for t in read), sum(ttfmap[t] for t in pos_terms)
+        ):
             return _SLICE_NA
+        return self._one_slice(terms, phrases, neg_terms, neg_phrases, min_should_match)
 
-        weights = {
-            t: np.float32(bm25_idf(dfmap[t], self.stats.max_doc) * (K1 + np.float32(1.0)))
-            for t in score_terms
-        }
-        boosts = {t: np.float32(b) for t, b, _ in term_entries}
-        nm_term = {t: (1 if m else 0) for t, _, m in term_entries}
+    def _one_slice(
+        self, terms=(), phrases=(), neg_terms=(), neg_phrases=(), min_should_match: int = 0
+    ) -> DataFrame:
+        """The single-slice kernel: (doc_id, score) of every doc matching one
+        boolean level, from ONE term-pruned scan coalesced to one partition —
+        the plan is scan → kernel, no exchange, no anti-join.
+
+        `terms` are `(term, weight, boost, is_must)` term clauses, `phrases`
+        `_Phrase` clauses; a doc matches when it satisfies every MUST clause
+        and at least `min_should_match` SHOULD clauses, and no doc of
+        `neg_terms` / `neg_phrases`. Each clause's float32 score (× float32
+        boost) is summed in float64 and cast once — exactly the distributed
+        `sum(score)::float` (Spark sums FloatType in double)."""
         cache = norm_cache(self.stats)
-        neg_term_set = set(neg_terms) & found
-        scan_terms = sorted(set(score_terms) | set(pos_terms) | neg_term_set)
+        pos_terms = {t for p in [*phrases, *neg_phrases] for slot in p.slots for t in slot}
+        scan = sorted({t for t, _, _, _ in terms} | pos_terms | set(neg_terms))
         cols = ["term", "first_doc", "doc_gaps", "tfs", "norm_bytes"]
-        if need_pos:
+        if pos_terms:
             cols.append("pos_flat")
-        total_must_f = total_must
+        total_must = sum(1 for *_, m in terms if m) + sum(1 for p in phrases if p.must)
+        msm = int(min_should_match)
+        phrase_freq = Searcher._phrase_freq
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            store: dict[str, list] = {}
+            store: dict[str, list] = {}  # term → [(docs, tfs, norm bytes)]
+            by_doc: dict[int, list] = {}  # doc → [(phrase term, positions)]
+            norms: dict[int, int] = {}
             for pdf in batches:
                 for row in pdf.itertuples(index=False):
-                    docs = row.first_doc + np.cumsum(
-                        np.asarray(row.doc_gaps, dtype=np.int64)
-                    )
+                    docs = _doc_ids(row)
                     tfs = np.asarray(row.tfs, dtype=np.int64)
                     nbs = np.asarray(row.norm_bytes, dtype=np.int64)
-                    plists = None
-                    if need_pos and row.term in pos_terms:
-                        plists = np.split(
-                            np.asarray(row.pos_flat, dtype=np.int64),
-                            np.cumsum(tfs)[:-1],
-                        )
-                    store.setdefault(row.term, []).append((docs, tfs, nbs, plists))
+                    store.setdefault(row.term, []).append((docs, tfs, nbs))
+                    if row.term in pos_terms:
+                        for d, nb, p in zip(docs.tolist(), nbs.tolist(), _positions(row, tfs)):
+                            by_doc.setdefault(d, []).append((row.term, p))
+                            norms[d] = nb
 
-            def eval_phrase(spec):
-                n_slots = len(spec["terms"])
-                slot_maps: list[dict] = [dict() for _ in range(n_slots)]
-                norm_map: dict[int, int] = {}
-                for si, t in enumerate(spec["terms"]):
-                    m = slot_maps[si]
-                    for docs, _tfs, nbs, plists in store.get(t, []):
-                        for d, nb, p in zip(docs.tolist(), nbs.tolist(), plists):
-                            adj = p - si
-                            prev = m.get(d)
-                            m[d] = adj if prev is None else np.union1d(prev, adj)
-                            norm_map[d] = nb
-                cand = set(slot_maps[0])
-                for m in slot_maps[1:]:
-                    cand &= set(m)
-                d_out, f_out, nb_out = [], [], []
-                for d in sorted(cand):
-                    slot_arrs = [m[d] for m in slot_maps]
-                    c0 = slot_arrs[0]
-                    for a in slot_arrs[1:]:
-                        c0 = np.intersect1d(c0, a)
-                    freq = float((c0 >= 0).sum())
+            def term_docs(t: str) -> list[np.ndarray]:
+                return [docs for docs, _, _ in store.get(t, [])]
+
+            def eval_phrase(ph: _Phrase):
+                term_slots = _term_slots(ph.slots)
+                cand = None
+                for slot in ph.slots:
+                    have = np.unique(
+                        np.concatenate([d for t in slot for d in term_docs(t)] or [[]])
+                    ).astype(np.int64)
+                    cand = have if cand is None else np.intersect1d(cand, have)
+                d_out, f_out = [], []
+                for d in cand.tolist():
+                    slot_arrs = _phrase_slots(by_doc[d], term_slots, len(ph.slots))
+                    freq = phrase_freq(slot_arrs, ph.slop)
                     if freq > 0:
                         d_out.append(d)
                         f_out.append(freq)
-                        nb_out.append(norm_map[d])
-                f32 = np.asarray(f_out, dtype=np.float32)
-                nb = np.asarray(nb_out, dtype=np.int64)
-                sc = (spec["weight"] * f32 / (f32 + cache[nb])).astype(np.float32)
-                if spec["boost"] != 1.0:
-                    sc = (sc * np.float32(spec["boost"])).astype(np.float32)
+                sc = posting_scores(ph.weight, f_out, [norms[d] for d in d_out], cache)
+                if ph.boost != 1.0:
+                    sc = (sc * np.float32(ph.boost)).astype(np.float32)
                 return np.asarray(d_out, dtype=np.int64), sc
 
             parts_docs, parts_score, parts_nm = [], [], []
-            for t in score_terms:
-                for docs, tfs, nbs, _pl in store.get(t, []):
-                    tf32 = tfs.astype(np.float32)
-                    s = (weights[t] * tf32 / (tf32 + cache[nbs])).astype(np.float32)
-                    s = (s * boosts[t]).astype(np.float32)
+            for t, w, boost, must in terms:
+                for docs, tfs, nbs in store.get(t, []):
+                    sc = posting_scores(w, tfs, nbs, cache)
                     parts_docs.append(docs)
-                    parts_score.append(s)
-                    parts_nm.append(
-                        np.full(len(docs), nm_term[t], dtype=np.int64)
-                    )
-            for spec in phrase_specs:
-                d, s = eval_phrase(spec)
+                    parts_score.append((sc * np.float32(boost)).astype(np.float32))
+                    parts_nm.append(np.full(len(docs), int(must), dtype=np.int64))
+            for ph in phrases:
+                d, sc = eval_phrase(ph)
                 parts_docs.append(d)
-                parts_score.append(s)
-                parts_nm.append(np.full(len(d), spec["nm"], dtype=np.int64))
+                parts_score.append(sc)
+                parts_nm.append(np.full(len(d), int(ph.must), dtype=np.int64))
             if not parts_docs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.array([], dtype=np.int64),
-                        "score": np.array([], dtype=np.float32),
-                    }
-                )
                 return
-            alldocs = np.concatenate(parts_docs)
-            u, inv = np.unique(alldocs, return_inverse=True)
+            u, inv = np.unique(np.concatenate(parts_docs), return_inverse=True)
             ssum = np.zeros(len(u), dtype=np.float64)
             np.add.at(ssum, inv, np.concatenate(parts_score).astype(np.float64))
             nmust = np.zeros(len(u), dtype=np.int64)
             np.add.at(nmust, inv, np.concatenate(parts_nm))
-            mask = nmust == total_must_f
-            neg_docs = [
-                docs for t in neg_term_set for docs, _, _, _ in store.get(t, [])
-            ]
-            for spec in neg_phrase_specs:
-                d, _ = eval_phrase(spec)
-                neg_docs.append(d)
-            if neg_docs:
-                mask &= ~np.isin(u, np.concatenate(neg_docs))
-            yield pd.DataFrame(
-                {"doc_id": u[mask], "score": ssum[mask].astype(np.float32)}
-            )
+            mask = nmust == total_must
+            if msm > 0:
+                mask &= np.bincount(inv, minlength=len(u)) - nmust >= msm
+            neg = [d for t in neg_terms for d in term_docs(t)]
+            neg += [eval_phrase(ph)[0] for ph in neg_phrases]
+            if neg:
+                mask &= ~np.isin(u, np.concatenate(neg))
+            yield pd.DataFrame({"doc_id": u[mask], "score": ssum[mask].astype(np.float32)})
 
         return (
-            self.postings.where(F.col("term").isin(scan_terms))
+            self.postings.where(F.col("term").isin(scan))
             .select(*cols)
             .coalesce(1)
             .mapInPandas(kernel, schema="doc_id long, score float")
@@ -2026,8 +1870,7 @@ class Searcher:
             for pdf in batches:
                 outs = []
                 for row in pdf.itertuples(index=False):
-                    gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                    outs.append(row.first_doc + np.cumsum(gaps))
+                    outs.append(_doc_ids(row))
                 if outs:
                     yield pd.DataFrame({"doc_id": np.concatenate(outs)})
 
@@ -2061,22 +1904,45 @@ class Searcher:
         )
         return [r.term for r in rows]
 
+    def _expand(self, c) -> list[str]:
+        """Dictionary rewrite of a prefix / wildcard / range / fuzzy clause
+        to its concrete terms. Fuzzy is capped at 50 expansions like
+        FuzzyQuery.defaultMaxExpansions, behind a length-band prefilter
+        (|len(t)-len(q)| ≤ edits, a necessary condition) pushed to the
+        parquet scan before the UDF-free levenshtein runs."""
+        term = F.col("term")
+        if c.kind == "prefix":
+            lit = c.terms[0].replace("%", r"\%").replace("_", r"\_")
+            return self._rewrite_terms(term.like(lit + "%"))
+        if c.kind == "wildcard":
+            return self._rewrite_terms(term.rlike(_wildcard_regex(c.terms[0])))
+        if c.kind == "range":
+            lo = term >= c.terms[0] if c.include_lower else term > c.terms[0]
+            hi = term <= c.terms[1] if c.include_upper else term < c.terms[1]
+            return self._rewrite_terms(lo & hi)
+        if c.kind == "fuzzy":
+            word = c.terms[0]
+            band = (F.length("term") >= len(word) - c.max_edits) & (
+                F.length("term") <= len(word) + c.max_edits
+            )
+            return self._rewrite_terms(
+                band & (F.levenshtein(term, F.lit(word)) <= c.max_edits),
+                max_expansions=50,
+            )
+        raise ValueError(c.kind)
+
+    def _expanded_search(self, terms: list[str], k: int) -> DataFrame:
+        """The rewritten terms executed as a scoring SHOULD disjunction."""
+        return self.boolean_search(should=terms, k=k) if terms else self._empty()
+
     def prefix_search(self, prefix: str, k: int = 10) -> DataFrame:
         """PrefixQuery (PrefixQuery.java:96)."""
-        lit = prefix.replace("%", r"\%").replace("_", r"\_")
-        terms = self._rewrite_terms(F.col("term").like(lit + "%"))
-        return self.boolean_search(should=terms, k=k) if terms else self._empty()
+        return self._expanded_search(self._expand(Clause(SHOULD, "prefix", [prefix])), k)
 
     def wildcard_search(self, pattern: str, k: int = 10) -> DataFrame:
         """WildcardQuery: `*` any run, `?` one char (WildcardQuery.java:116),
         compiled to an anchored regex against the term dictionary."""
-        import re as _re
-
-        rx = "^" + "".join(
-            ".*" if c == "*" else "." if c == "?" else _re.escape(c) for c in pattern
-        ) + "$"
-        terms = self._rewrite_terms(F.col("term").rlike(rx))
-        return self.boolean_search(should=terms, k=k) if terms else self._empty()
+        return self._expanded_search(self._expand(Clause(SHOULD, "wildcard", [pattern])), k)
 
     def build_reversed_dictionary(self, path: str | None = None) -> str:
         """ReversedWildcardFilter analog (solr/core/src/java/org/apache/
@@ -2090,9 +1956,7 @@ class Searcher:
         pruning instead of a full-dictionary regex scan. At a 10^8-term
         web dictionary that is the difference between reading ~one row
         group and reading all of them."""
-        import os as _os
-
-        path = path or _os.path.join(self.paths.root, "rterms")
+        path = path or os.path.join(self.paths.root, "rterms")
         (
             self.terms.select(
                 F.reverse(F.col("term")).alias("rterm"), "term", "df"
@@ -2106,11 +1970,9 @@ class Searcher:
         return path
 
     def _reversed_dictionary(self) -> DataFrame:
-        import os as _os
-
         if getattr(self, "_rterms", None) is None:
-            path = _os.path.join(self.paths.root, "rterms")
-            if _os.path.exists(path):
+            path = os.path.join(self.paths.root, "rterms")
+            if os.path.exists(path):
                 self._rterms = self.spark.read.parquet(path)
             else:
                 # fallback: derive on the fly (no parquet pushdown, still
@@ -2126,16 +1988,10 @@ class Searcher:
         reversed PREFIX pushdown, the full anchored regex then verifies
         only the pruned candidates (ReversedWildcardFilter's query-time
         rule: reverse the pattern when the wildcard is leading)."""
-        import re as _re
-
-        m = _re.search(r"[^*?]+$", pattern)
+        m = re.search(r"[^*?]+$", pattern)
         suffix = m.group(0) if m else ""
-        rx = "^" + "".join(
-            ".*" if c == "*" else "." if c == "?" else _re.escape(c)
-            for c in pattern
-        ) + "$"
         rdict = self._reversed_dictionary()
-        cond = F.col("term").rlike(rx)
+        cond = F.col("term").rlike(_wildcard_regex(pattern))
         if suffix:
             lit = suffix[::-1].replace("%", r"\%").replace("_", r"\_")
             cond = F.col("rterm").like(lit + "%") & cond
@@ -2146,37 +2002,25 @@ class Searcher:
             .limit(self.MAX_EXPANSIONS)
             .collect()
         )
-        terms = [r.term for r in rows]
-        return self.boolean_search(should=terms, k=k) if terms else self._empty()
+        return self._expanded_search([r.term for r in rows], k)
 
     def regexp_search(self, regex: str, k: int = 10) -> DataFrame:
         """RegexpQuery (RegexpQuery.java:107) — anchored like Lucene."""
         terms = self._rewrite_terms(F.col("term").rlike(f"^(?:{regex})$"))
-        return self.boolean_search(should=terms, k=k) if terms else self._empty()
+        return self._expanded_search(terms, k)
 
     def fuzzy_search(self, term: str, max_edits: int = 2, k: int = 10) -> DataFrame:
         """FuzzyQuery: Levenshtein ≤ max_edits over the dictionary
-        (FuzzyQuery.java:28-76); executed as the rewritten disjunction,
-        capped at 50 expansions like FuzzyQuery.defaultMaxExpansions. A
-        length-band prefilter (|len(t)-len(q)| ≤ edits, a necessary
-        condition) is pushed to the parquet scan before the UDF-free
-        levenshtein runs."""
-        band = (F.length("term") >= len(term) - max_edits) & (
-            F.length("term") <= len(term) + max_edits
-        )
-        terms = self._rewrite_terms(
-            band & (F.levenshtein(F.col("term"), F.lit(term)) <= max_edits),
-            max_expansions=50,
-        )
-        return self.boolean_search(should=terms, k=k) if terms else self._empty()
+        (FuzzyQuery.java:28-76); executed as the rewritten disjunction."""
+        c = Clause(SHOULD, "fuzzy", [term], max_edits=max_edits)
+        return self._expanded_search(self._expand(c), k)
 
     def range_search(self, lower: str, upper: str, k: int = 10,
                      include_lower: bool = True, include_upper: bool = False) -> DataFrame:
         """TermRangeQuery over the sorted dictionary (TermRangeQuery.java)."""
-        lo = F.col("term") >= lower if include_lower else F.col("term") > lower
-        hi = F.col("term") <= upper if include_upper else F.col("term") < upper
-        terms = self._rewrite_terms(lo & hi)
-        return self.boolean_search(should=terms, k=k) if terms else self._empty()
+        c = Clause(SHOULD, "range", [lower, upper], include_lower=include_lower,
+                   include_upper=include_upper)
+        return self._expanded_search(self._expand(c), k)
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], "doc_id long, score float")
@@ -2196,8 +2040,6 @@ class Searcher:
         """Parse classic syntax (+must -not "phrases" boosts AND/OR) and
         execute as one mixed boolean query (QueryParserBase.java:494-790 →
         BooleanQuery execution)."""
-        from .parser import parse
-
         return self.execute_clauses(parse(query_string), k=k)
 
     def execute_clauses(self, clauses, k: int = 10) -> DataFrame:
@@ -2205,10 +2047,9 @@ class Searcher:
         MUST_NOT anti-join, nested groups, multi-term syntax, per-clause
         boosts (BooleanQuery over TermScorer / ExactPhraseScorer /
         MultiTermQuery-rewrite / nested-BooleanQuery children)."""
-        empty = self.spark.createDataFrame([], "doc_id long, score float")
         scored = self._clauses_scored(clauses)
         if scored is None:
-            return empty
+            return self._empty()
         return self._topk(self._drop_deleted(scored), k)
 
     def _multi_term_clause(self, c) -> DataFrame | None:
@@ -2216,50 +2057,13 @@ class Searcher:
         range execute constant-score (the 4.4 default rewrite,
         CONSTANT_SCORE_AUTO_REWRITE_DEFAULT in MultiTermQuery.java); fuzzy
         uses the scoring top-terms rewrite like FuzzyQuery."""
-        if c.kind == "prefix":
-            lit = c.terms[0].replace("%", r"\%").replace("_", r"\_")
-            terms = self._rewrite_terms(F.col("term").like(lit + "%"))
-            scoring = False
-        elif c.kind == "wildcard":
-            import re as _re
-
-            rx = "^" + "".join(
-                ".*" if ch == "*" else "." if ch == "?" else _re.escape(ch)
-                for ch in c.terms[0]
-            ) + "$"
-            terms = self._rewrite_terms(F.col("term").rlike(rx))
-            scoring = False
-        elif c.kind == "range":
-            lo = (
-                F.col("term") >= c.terms[0]
-                if c.include_lower
-                else F.col("term") > c.terms[0]
-            )
-            hi = (
-                F.col("term") <= c.terms[1]
-                if c.include_upper
-                else F.col("term") < c.terms[1]
-            )
-            terms = self._rewrite_terms(lo & hi)
-            scoring = False
-        elif c.kind == "fuzzy":
-            word = c.terms[0]
-            band = (F.length("term") >= len(word) - c.max_edits) & (
-                F.length("term") <= len(word) + c.max_edits
-            )
-            terms = self._rewrite_terms(
-                band & (F.levenshtein(F.col("term"), F.lit(word)) <= c.max_edits),
-                max_expansions=50,
-            )
-            scoring = True
-        else:
-            raise ValueError(c.kind)
+        terms = self._expand(c)
         if not terms:
             return None
         tinfo = self.lookup_terms(terms)
         if tinfo.empty:
             return None
-        if scoring:
+        if c.kind == "fuzzy":
             return (
                 self._scored(tinfo)
                 .groupBy("doc_id")
@@ -2270,11 +2074,13 @@ class Searcher:
         )
 
     def _clauses_scored(
-        self, clauses, field_searchers: dict | None = None
+        self, clauses, field_searchers: dict | None = None, min_should_match: int = 0
     ) -> DataFrame | None:
         """(doc_id, score) of one boolean level — None when nothing can
         match. Recurses into `group` clauses (nested BooleanQuery scoring:
-        the group's summed score becomes one sub-scorer contribution).
+        the group's summed score becomes one sub-scorer contribution). A doc
+        matches every MUST clause, at least `min_should_match` SHOULD
+        clauses, and no MUST_NOT clause.
 
         `field_searchers` maps a clause's `field` to the Searcher of that
         field's sub-index (multi-field indexes share docIDs, so scores and
@@ -2282,22 +2088,19 @@ class Searcher:
         the field-generic QueryParserBase.java:494-790 surface."""
         from functools import reduce
 
-        from .parser import MUST, MUST_NOT, SHOULD  # noqa: F401
-
         fs = field_searchers or {}
+        scoring = [c for c in clauses if c.occur in (MUST, SHOULD)]
+        negative = [c for c in clauses if c.occur == MUST_NOT]
+        if not scoring:
+            return None
         if not fs:
-            fast = self._single_slice_clauses(clauses)
+            fast = self._single_slice_clauses(scoring, negative, min_should_match)
             if fast is not _SLICE_NA:
                 return fast
 
         def res(c) -> "Searcher":
             f = getattr(c, "field", None)
             return fs.get(f, self) if f is not None else self
-
-        scoring = [c for c in clauses if c.occur in (MUST, SHOULD)]
-        negative = [c for c in clauses if c.occur == MUST_NOT]
-        if not scoring:
-            return None
 
         parts = []
         total_must = 0
@@ -2393,8 +2196,12 @@ class Searcher:
         agg = union.groupBy("doc_id").agg(
             F.sum("score").cast("float").alias("score"),
             F.sum("nm").alias("n_must"),
+            F.count(F.lit(1)).alias("n_matched"),  # one part row per clause hit
         )
-        matched = agg.where(F.col("n_must") == total_must).select("doc_id", "score")
+        cond = F.col("n_must") == total_must
+        if min_should_match > 0:
+            cond = cond & (F.col("n_matched") - F.col("n_must") >= min_should_match)
+        matched = agg.where(cond).select("doc_id", "score")
 
         if negative:
             neg_docs = None
@@ -2568,6 +2375,48 @@ class Searcher:
         d = d[d <= slop]
         return float((1.0 / (d + 1.0)).sum())
 
+    @staticmethod
+    def _phrase_freq(slot_arrs: list, slop: int) -> float:
+        """Phrase freq of one doc from its offset-adjusted slot positions:
+        slop=0 → exact alignment count (ExactPhraseScorer.java:29-82);
+        slop>0 → sloppyFreq via the vectorized 2-slot / k-slot forms, with
+        the PQ reference loop for adjusted-position ties."""
+        if slop == 0:
+            c = slot_arrs[0]
+            for a in slot_arrs[1:]:
+                c = np.intersect1d(c, a)
+            return float((c >= 0).sum())
+        if len(slot_arrs) == 2:
+            return Searcher._sloppy_freq_2(slot_arrs[0], slot_arrs[1], slop)
+        freq = Searcher._sloppy_freq_k(slot_arrs, slop)
+        return Searcher._sloppy_freq(slot_arrs, slop) if freq is None else freq
+
+    def _position_rows(self, qterms: list[str]) -> DataFrame:
+        """(doc_id, term, norm_byte, positions): one row per posting of the
+        terms, positions decoded — the input of the distributed position
+        plans (phrases here, spans in query/spans.py)."""
+
+        def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                recs = {"doc_id": [], "term": [], "norm_byte": [], "positions": []}
+                for row in pdf.itertuples(index=False):
+                    docs = _doc_ids(row)
+                    tfs = np.asarray(row.tfs, dtype=np.int64)
+                    recs["doc_id"].extend(docs.tolist())
+                    recs["term"].extend([row.term] * len(docs))
+                    recs["norm_byte"].extend(np.asarray(row.norm_bytes).tolist())
+                    recs["positions"].extend([p.tolist() for p in _positions(row, tfs)])
+                yield pd.DataFrame(recs)
+
+        return (
+            self.postings.where(F.col("term").isin(qterms))
+            .select("term", "first_doc", "doc_gaps", "tfs", "norm_bytes", "pos_flat")
+            .mapInPandas(
+                explode,
+                schema="doc_id long, term string, norm_byte int, positions array<long>",
+            )
+        )
+
     def _phrase_scored(
         self, terms: list[str] | list[list[str]], slop: int = 0
     ) -> DataFrame | None:
@@ -2575,75 +2424,28 @@ class Searcher:
         None when a slot has no alternative in the dictionary.
 
         `terms` is a list of slots; a plain string element is a
-        single-alternative slot. slop=0 → exact alignment freq
-        (ExactPhraseScorer.java:29-82); slop>0 → `_sloppy_freq`. The phrase
-        tf feeds the standard BM25 formula with summed idf over the query's
-        dictionary terms (BM25Similarity.java:185-198)."""
+        single-alternative slot. The phrase freq (`_phrase_freq`) feeds the
+        standard BM25 formula with the idf of the distinct dictionary terms
+        summed (`bm25.phrase_weight`, BM25Similarity.java:185-198). Small
+        position volumes run in the one-slice kernel; the rest shuffle
+        position lists by doc."""
         if not terms:
             return None
         slots: list[list[str]] = [[t] if isinstance(t, str) else list(t) for t in terms]
-        all_terms = sorted({t for slot in slots for t in slot})
-        tinfo = self.lookup_terms(all_terms)
+        tinfo = self.lookup_terms(sorted({t for slot in slots for t in slot}))
         found_terms = set(tinfo["term"])
         slots = [[t for t in slot if t in found_terms] for slot in slots]
         if any(not slot for slot in slots):
             return None
+        weight = phrase_weight(tinfo["df"], self.stats.max_doc)
+        if self._single_slice(int(tinfo["df"].sum()), int(tinfo["ttf"].sum())):
+            return self._one_slice(phrases=[_Phrase(slots, weight, slop)])
 
-        # phrase weight: summed idf over the found terms
-        # (BM25Similarity.java:185-198)
-        idf_sum = np.float32(
-            sum(
-                float(bm25_idf(int(r.df), self.stats.max_doc))
-                for r in tinfo.itertuples()
-            )
-        )
-        weight = np.float32(idf_sum * (K1 + np.float32(1.0)))
-        cache = norm_cache(self.stats)
-        term_slots: dict[str, list[int]] = {}  # term -> slots it may fill
-        for i, slot in enumerate(slots):
-            for t in slot:
-                term_slots.setdefault(t, []).append(i)
+        term_slots = _term_slots(slots)
         qterms = sorted(term_slots)
         n_slots = len(slots)
         single_alternative = all(len(s) == 1 for s in slots)
-
-        slice_limit = int(
-            os.environ.get("LSS_SINGLE_SLICE_POSITIONS", str(250_000))
-        )
-        total_pos = int(tinfo[tinfo["term"].isin(qterms)]["ttf"].sum())
-        if 0 < total_pos <= slice_limit:
-            # single-slice phrase: ALL position lists of the query terms fit
-            # one executor slice, so the alignment+scoring kernel runs once
-            # over a coalesced scan — no position shuffle, no collect_list
-            # exchange, one stage (same regime argument as
-            # `_single_slice_boolean`; Σttf is known from the dictionary
-            # before any job runs). Emits EVERY matching doc (callers topk).
-            return self._phrase_scored_single_slice(
-                qterms, slots, term_slots, n_slots, slop, weight, cache
-            )
-
-        def explode_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                recs = {"doc_id": [], "term": [], "norm_byte": [], "positions": []}
-                for row in pdf.itertuples(index=False):
-                    docs = row.first_doc + np.cumsum(np.asarray(row.doc_gaps, dtype=np.int64))
-                    tfs = np.asarray(row.tfs, dtype=np.int64)
-                    cuts = np.cumsum(tfs)[:-1]
-                    plists = np.split(np.asarray(row.pos_flat, dtype=np.int64), cuts)
-                    recs["doc_id"].extend(docs.tolist())
-                    recs["term"].extend([row.term] * len(docs))
-                    recs["norm_byte"].extend(np.asarray(row.norm_bytes).tolist())
-                    recs["positions"].extend([p.tolist() for p in plists])
-                yield pd.DataFrame(recs)
-
-        pos_rows = (
-            self.postings.where(F.col("term").isin(qterms))
-            .select("term", "first_doc", "doc_gaps", "tfs", "norm_bytes", "pos_flat")
-            .mapInPandas(
-                explode_positions,
-                schema="doc_id long, term string, norm_byte int, positions array<long>",
-            )
-        )
+        pos_rows = self._position_rows(qterms)
         # prefilter pays one extra postings pass to shrink the heavy position
         # shuffle — worth it only when the position volume is actually heavy
         prefilter = (
@@ -2661,9 +2463,8 @@ class Searcher:
                 for pdf in batches:
                     d_out, t_out = [], []
                     for row in pdf.itertuples(index=False):
-                        gaps = np.asarray(row.doc_gaps, dtype=np.int64)
-                        d_out.append(row.first_doc + np.cumsum(gaps))
-                        t_out.extend([row.term] * len(gaps))
+                        d_out.append(_doc_ids(row))
+                        t_out.extend([row.term] * len(d_out[-1]))
                     if d_out:
                         yield pd.DataFrame(
                             {"doc_id": np.concatenate(d_out), "term": t_out}
@@ -2694,133 +2495,39 @@ class Searcher:
             )
             .where(F.col("nt") >= required_nt)
         )
+        cache = norm_cache(self.stats)
+        phrase_freq = Searcher._phrase_freq
 
-        sloppy_fn = Searcher._sloppy_freq
-        sloppy2_fn = Searcher._sloppy_freq_2
-        sloppyk_fn = Searcher._sloppy_freq_k
-
-        def phrase_freq(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def phrase_scores(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # alignment check AND BM25 scoring in ONE Python eval — a second
             # mapInPandas in the same stage would pay a full extra
             # JVM→Arrow→Python round trip per batch for one vectorized line
             for pdf in pdf_iter:
                 doc_ids, freqs, nbs = [], [], []
                 for row in pdf.itertuples(index=False):
-                    slot_arrs: list[np.ndarray | None] = [None] * n_slots
-                    for entry in row.plists:
-                        tid, positions = entry["term"], entry["positions"]
-                        p = np.asarray(positions, dtype=np.int64)
-                        for si in term_slots[tid]:
-                            adj = p - si
-                            slot_arrs[si] = (
-                                adj
-                                if slot_arrs[si] is None
-                                else np.union1d(slot_arrs[si], adj)
-                            )
-                    if any(a is None for a in slot_arrs):
+                    slot_arrs = _phrase_slots(
+                        (
+                            (e["term"], np.asarray(e["positions"], dtype=np.int64))
+                            for e in row.plists
+                        ),
+                        term_slots,
+                        n_slots,
+                    )
+                    if slot_arrs is None:
                         continue  # some slot has no alternative in this doc
-                    if slop == 0:
-                        cand = slot_arrs[0]
-                        for a in slot_arrs[1:]:
-                            cand = np.intersect1d(cand, a)
-                        freq = float((cand >= 0).sum())
-                    elif n_slots == 2:
-                        # vectorized common case — no per-position Python
-                        freq = sloppy2_fn(slot_arrs[0], slot_arrs[1], slop)
-                    else:
-                        freq = sloppyk_fn(slot_arrs, slop)
-                        if freq is None:  # adjusted-position ties: PQ loop
-                            freq = sloppy_fn(slot_arrs, slop)
+                    freq = phrase_freq(slot_arrs, slop)
                     if freq > 0:
                         doc_ids.append(row.doc_id)
                         freqs.append(freq)
                         nbs.append(row.norm_byte)
-                f32 = np.asarray(freqs, dtype=np.float32)
-                nb = np.asarray(nbs, dtype=np.int64)
-                sc = (weight * f32 / (f32 + cache[nb])).astype(np.float32)
                 yield pd.DataFrame(
-                    {"doc_id": np.asarray(doc_ids, dtype=np.int64), "score": sc}
+                    {
+                        "doc_id": np.asarray(doc_ids, dtype=np.int64),
+                        "score": posting_scores(weight, freqs, nbs, cache),
+                    }
                 )
 
-        return grouped.mapInPandas(
-            phrase_freq, schema="doc_id long, score float"
-        )
-
-    def _phrase_scored_single_slice(
-        self,
-        qterms: list[str],
-        slots: list[list[str]],
-        term_slots: dict[str, list[int]],
-        n_slots: int,
-        slop: int,
-        weight: np.float32,
-        cache: np.ndarray,
-    ) -> DataFrame:
-        """One-kernel (multi-)phrase evaluation for small position volumes:
-        decode + slot assembly + alignment + BM25 scoring in a single
-        coalesced task. Per-doc logic is IDENTICAL to the distributed
-        `phrase_freq` kernel (exact intersect chain / `_sloppy_freq_2` /
-        `_sloppy_freq`)."""
-        sloppy_fn = Searcher._sloppy_freq
-        sloppy2_fn = Searcher._sloppy_freq_2
-        sloppyk_fn = Searcher._sloppy_freq_k
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            slot_maps: list[dict] = [dict() for _ in range(n_slots)]
-            norm_map: dict[int, int] = {}
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    docs = row.first_doc + np.cumsum(
-                        np.asarray(row.doc_gaps, dtype=np.int64)
-                    )
-                    tfs = np.asarray(row.tfs, dtype=np.int64)
-                    plists = np.split(
-                        np.asarray(row.pos_flat, dtype=np.int64),
-                        np.cumsum(tfs)[:-1],
-                    )
-                    nbs = np.asarray(row.norm_bytes, dtype=np.int64)
-                    slot_ids = term_slots[row.term]
-                    for d, nb, p in zip(docs.tolist(), nbs.tolist(), plists):
-                        norm_map[d] = nb
-                        for si in slot_ids:
-                            adj = p - si
-                            m = slot_maps[si]
-                            prev = m.get(d)
-                            m[d] = adj if prev is None else np.union1d(prev, adj)
-            cand = set(slot_maps[0])
-            for m in slot_maps[1:]:
-                cand &= set(m)
-            doc_ids, freqs, nb_out = [], [], []
-            for d in sorted(cand):
-                slot_arrs = [m[d] for m in slot_maps]
-                if slop == 0:
-                    c = slot_arrs[0]
-                    for a in slot_arrs[1:]:
-                        c = np.intersect1d(c, a)
-                    freq = float((c >= 0).sum())
-                elif n_slots == 2:
-                    freq = sloppy2_fn(slot_arrs[0], slot_arrs[1], slop)
-                else:
-                    freq = sloppyk_fn(slot_arrs, slop)
-                    if freq is None:  # adjusted-position ties: PQ loop
-                        freq = sloppy_fn(slot_arrs, slop)
-                if freq > 0:
-                    doc_ids.append(d)
-                    freqs.append(freq)
-                    nb_out.append(norm_map[d])
-            f32 = np.asarray(freqs, dtype=np.float32)
-            nb = np.asarray(nb_out, dtype=np.int64)
-            sc = (weight * f32 / (f32 + cache[nb])).astype(np.float32)
-            yield pd.DataFrame(
-                {"doc_id": np.asarray(doc_ids, dtype=np.int64), "score": sc}
-            )
-
-        return (
-            self.postings.where(F.col("term").isin(qterms))
-            .select("term", "first_doc", "doc_gaps", "tfs", "norm_bytes", "pos_flat")
-            .coalesce(1)
-            .mapInPandas(kernel, schema="doc_id long, score float")
-        )
+        return grouped.mapInPandas(phrase_scores, schema="doc_id long, score float")
 
     def paged_search(
         self,

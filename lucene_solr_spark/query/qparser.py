@@ -860,11 +860,12 @@ class SolrQueries:
         match_set.unpersist()
         return out
 
-    def select_response(self, params: dict) -> str:
+    def select_response(self, params: dict) -> str | bytes:
         """/select with a serialized body: runs select() and writes the
         response in the wt= format (QueryResponseWriter registry —
-        json/xml/csv/python/ruby/php/phps, response_writers.py), timing
-        the request for responseHeader.QTime as SolrCore does."""
+        json/xml/csv/python/ruby/php/phps text, javabin bytes;
+        response_writers.py), timing the request for responseHeader.QTime
+        as SolrCore does."""
         import time
 
         from .response_writers import write_response

@@ -6,7 +6,8 @@ Reference (solr/core/src/java/org/apache/solr/response/):
   arrmap} NamedList styles (flat is the default; SimpleOrderedMap always
   renders as a JSON object, java:297-309), json.wrf wrapper function,
   trailing newline; string escaping per writeStr (quotes, backslash,
-  control chars, and U+007F..U+00A0 as \\u escapes).
+  control chars, and U+2028/U+2029 as \\u escapes — the JavaScript line
+  terminators that would break json.wrf output; everything else raw).
 - XMLResponseWriter.java / XMLWriter.java — typed elements <str>/<int>/
   <long>/<float>/<double>/<bool>/<date>/<arr>/<lst>, the doc list as
   <result name numFound start [maxScore]><doc>…; XML 1.0 header +
@@ -17,7 +18,8 @@ Reference (solr/core/src/java/org/apache/solr/response/):
   multivalued fields join on the mv separator and the JOINED string is
   then CSV-encapsulated (goldens in TestCSVResponseWriter.java:52-111).
 - PythonResponseWriter.java — JSON deltas: None/True/False, single-quoted
-  strings with a u prefix when non-ASCII escapes were needed,
+  strings with a u prefix when non-ASCII escapes were needed (one \\u
+  escape per UTF-16 unit, so an astral character is a surrogate pair),
   float('NaN') / float('Inf').
 - RubyResponseWriter.java — key=>value, nil, single-quoted strings with
   only \\ and ' escaped (raw UTF-8 passes through), (0.0/0.0), (1.0/0.0).
@@ -207,7 +209,7 @@ class _JSONWriter:
 
     def write_str(self, s: str):
         # JSONWriter.writeStr: escape ", \, named controls, and \u for
-        # other chars < 0x20 plus the 0x7F..0xA0 band
+        # other chars < 0x20 plus U+2028/U+2029; everything else raw
         buf = ['"']
         for ch in s:
             if ch == '"' or ch == "\\":
@@ -222,7 +224,7 @@ class _JSONWriter:
                 buf.append("\\b")
             elif ch == "\f":
                 buf.append("\\f")
-            elif ch < " " or "\x7f" <= ch <= "\xa0":
+            elif ch < " " or ch in "\u2028\u2029":
                 buf.append("\\u%04x" % ord(ch))
             else:
                 buf.append(ch)
@@ -384,7 +386,10 @@ class _PythonWriter(_JSONWriter):
             elif ch == "\t":
                 buf.append("\\t")
             elif ch < " " or ch > "\x7f":
-                buf.append("\\u%04x" % ord(ch))
+                # one escape per UTF-16 unit, as Java iterates chars
+                units = ch.encode("utf-16-be", "surrogatepass")
+                for i in range(0, len(units), 2):
+                    buf.append("\\u%02x%02x" % (units[i], units[i + 1]))
                 need_unicode = True
             else:
                 buf.append(ch)
@@ -739,9 +744,10 @@ def _solrify(rsp: dict | NamedList, params: dict, qtime_ms: int) -> NamedList:
 
 
 def write_response(rsp: dict | NamedList, wt: str = "json",
-                   params: dict | None = None, qtime_ms: int = 0) -> str:
+                   params: dict | None = None, qtime_ms: int = 0) -> str | bytes:
     """QueryResponseWriter.write: serialize a select() response dict (or a
-    hand-built NamedList) in the requested wt format."""
+    hand-built NamedList) in the requested wt format — text for every wt
+    except javabin, which returns bytes."""
     params = dict(params or {})
     wt = wt or params.get("wt", "json")
     if wt not in SUPPORTED_WT:

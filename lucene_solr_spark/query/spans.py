@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bm25 import K1, bm25_idf, norm_cache
+from .bm25 import norm_cache, phrase_weight, posting_scores
 
 SpanNode = Union["SpanTerm", "SpanNear", "SpanOr", "SpanNot", "SpanFirst"]
 
@@ -254,39 +254,11 @@ def span_search(
     if tinfo.empty or missing_mandatory:
         return searcher.spark.createDataFrame([], "doc_id long, score float")
 
-    idf_sum = np.float32(
-        sum(
-            float(bm25_idf(int(r.df), searcher.stats.max_doc))
-            for r in tinfo.itertuples()
-        )
-    )
-    weight = np.float32(idf_sum * (K1 + np.float32(1.0)))
+    weight = phrase_weight(tinfo["df"], searcher.stats.max_doc)
     cache = norm_cache(searcher.stats)
     qterms = sorted(found)
     n_mandatory = len(mandatory_terms(node) & found)
-
-    def explode_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {"doc_id": [], "term": [], "norm_byte": [], "positions": []}
-            for row in pdf.itertuples(index=False):
-                docs = row.first_doc + np.cumsum(np.asarray(row.doc_gaps, dtype=np.int64))
-                tfs = np.asarray(row.tfs, dtype=np.int64)
-                cuts = np.cumsum(tfs)[:-1]
-                plists = np.split(np.asarray(row.pos_flat, dtype=np.int64), cuts)
-                recs["doc_id"].extend(docs.tolist())
-                recs["term"].extend([row.term] * len(docs))
-                recs["norm_byte"].extend(np.asarray(row.norm_bytes).tolist())
-                recs["positions"].extend([p.tolist() for p in plists])
-            yield pd.DataFrame(recs)
-
-    pos_rows = (
-        searcher.postings.where(F.col("term").isin(qterms))
-        .select("term", "first_doc", "doc_gaps", "tfs", "norm_bytes", "pos_flat")
-        .mapInPandas(
-            explode_positions,
-            schema="doc_id long, term string, norm_byte int, positions array<long>",
-        )
-    )
+    pos_rows = searcher._position_rows(qterms)
     grouped = (
         pos_rows.groupBy("doc_id")
         .agg(
@@ -310,11 +282,11 @@ def span_search(
                     doc_ids.append(row.doc_id)
                     freqs.append(freq)
                     nbs.append(row.norm_byte)
-            f32 = np.asarray(freqs, dtype=np.float32)
-            nb = np.asarray(nbs, dtype=np.int64)
-            sc = (weight * f32 / (f32 + cache[nb])).astype(np.float32)
             yield pd.DataFrame(
-                {"doc_id": np.asarray(doc_ids, dtype=np.int64), "score": sc}
+                {
+                    "doc_id": np.asarray(doc_ids, dtype=np.int64),
+                    "score": posting_scores(weight, freqs, nbs, cache),
+                }
             )
 
     scored = grouped.mapInPandas(kernel, schema="doc_id long, score float")

@@ -195,3 +195,39 @@ class TestSidecarE2E:
         s = Searcher(spark, index)
         hits = s.search("common", k=5).collect()
         assert len(hits) == 5
+
+
+class TestSidecarReopen:
+    def test_append_reopen_finds_new_term(self, spark, tmp_path_factory):
+        """A sidecar built before an NRT append lacks the appended terms: the
+        reopened searcher must not answer them NO from the stale filter."""
+        from lucene_solr_spark.index.build import build_index
+        from lucene_solr_spark.query.executor import Searcher
+        from lucene_solr_spark.streaming.nrt import append_segment
+
+        pages = spark.createDataFrame(
+            [(f"u{i}", f"alpha{i % 7} common") for i in range(30)],
+            "url string, text string")
+        paths = build_index(spark, pages,
+                            str(tmp_path_factory.mktemp("bloom_nrt_idx")))
+        build_bloom_sidecar(spark, paths)
+        s = Searcher(spark, paths)
+        assert s._bloom is not None and s._bloom.max_doc == 30
+        probe = next(t for t in (f"fresh{i}" for i in range(1000))
+                     if s._bloom.contains(t) == "NO")
+        assert s.lookup_terms([probe]).empty  # cached as absent
+
+        more = spark.createDataFrame([("new1", f"{probe} common")],
+                                     "url string, text string")
+        append_segment(spark, more, paths)
+        s.reopen()
+        assert BloomDict.exists(paths.root)  # the stale sidecar is present
+        assert s._bloom is None
+        assert s.lookup_terms([probe])["df"].tolist() == [1]
+        assert len(s.search(probe).collect()) == 1
+
+        # a sidecar rebuilt at the new max_doc is consulted again
+        build_bloom_sidecar(spark, paths)
+        s.reopen()
+        assert s._bloom is not None and s._bloom.max_doc == 31
+        assert s.lookup_terms([probe])["df"].tolist() == [1]

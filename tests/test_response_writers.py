@@ -209,7 +209,16 @@ class TestJSON:
         nl = NamedList([("s", 'a"b\\c\nd\x7f')])
         out = write_response(nl, wt="json")
         assert json.loads(out)["s"] == 'a"b\\c\nd\x7f'
-        assert "\\u007f" in out  # the 0x7F..0xA0 band is \\u-escaped
+        assert "d\x7f" in out  # JSONWriter.writeStr emits U+007F raw
+
+    def test_latin1_band_raw_and_js_line_terminators_escaped(self):
+        s = "\x80nbsp\xa0 line\u2028para\u2029"
+        out = write_response(NamedList([("s", s)]), wt="json",
+                             params={"json.wrf": "cb"})
+        assert "\x80nbsp\xa0" in out
+        assert "\\u2028" in out and "\\u2029" in out
+        assert "\u2028" not in out and "\u2029" not in out
+        assert json.loads(out.rstrip()[3:-1])["s"] == s
 
     def test_trailing_newline(self):
         assert write_response(self._rsp()).endswith("\n")
@@ -224,6 +233,13 @@ class TestPythonRuby:
         doc = data["response"]["docs"][0]
         assert doc == {"id": "1", "t": True, "n": None, "s": "żółć",
                        "f": 1.414}
+
+    def test_python_astral_chars_are_surrogate_pairs(self):
+        s = "hi \U0001F600!"
+        out = write_response(NamedList([("s", s)]), wt="python")
+        assert "u'hi \\ud83d\\ude00!'" in out
+        got = eval(out)["s"]  # lone surrogates in Python 3, one char in 2
+        assert got.encode("utf-16-le", "surrogatepass").decode("utf-16-le") == s
 
     def test_python_nan_inf(self):
         out = write_response(NamedList([("a", float("nan")),
@@ -327,3 +343,15 @@ class TestFullComponentSerialization:
                                        params={"omitHeader": "true"}))
         names = [k for k, _ in back.pairs]
         assert "grouped" in names and "spellcheck" in names
+
+
+def test_javabin_entry_points_are_annotated_bytes():
+    import typing
+
+    from lucene_solr_spark.query.qparser import SolrQueries
+
+    for fn in (write_response, SolrQueries.select_response):
+        assert typing.get_type_hints(fn)["return"] == str | bytes
+    rsp = {"response": {"numFound": 0, "start": 0, "docs": []}}
+    assert isinstance(write_response(rsp, wt="javabin"), bytes)
+    assert isinstance(write_response(rsp, wt="json"), str)
